@@ -17,25 +17,28 @@ prunes to the partitions a batch can touch.
 
 from __future__ import annotations
 
-import contextlib
 import os
 import time
 
 from pyspark.errors import AnalysisException
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from ..schemas import APPLICATION_EVENTS_DEDUP_KEY, CSV_EXPORT_COLUMNS
 
 
-def export_csv(df: DataFrame, path: str, single_file: bool = False) -> None:
+def export_csv(df: DataFrame, path: str, single_file: bool = False) -> int:
     """K1 — CSV export with the reference's exact column order
     (extract_bq.py:149). ``single_file`` coalesces to one part for
     byte-level golden-file parity; leave False at scale (parallel
-    part files)."""
+    part files). Returns the rows written, observed during the write."""
+    written = Observation()
     out = df.select(*[c for c in CSV_EXPORT_COLUMNS if c in df.columns] or df.columns)
+    out = out.observe(written, F.count(F.lit(1)).alias("n"))
     if single_file:
         out = out.coalesce(1)
     out.write.mode("overwrite").option("header", True).csv(path)
+    return written.get["n"]
 
 
 class TargetLock:
@@ -105,7 +108,6 @@ def idempotent_append_parquet(
     target_path: str,
     keys: list[str] | None = None,
     partition_by: list[str] | None = None,
-    lock: bool = True,
 ) -> int:
     """K4/K5 — conflict-skipping append to a parquet target.
 
@@ -117,70 +119,59 @@ def idempotent_append_parquet(
        date-partitioned the existing-keys side is semi-join-pruned to
        the partition values present in this batch (dynamic partition
        pruning skips the untouched partitions' files; at 100 TB the
-       anti-join otherwise scans the whole history every run);
+       anti-join otherwise scans the whole history every run). A
+       target that does not exist yet is a first load: no anti-join;
     3. append, under a cross-process ``TargetLock`` — the read-keys →
        append sequence is only exactly-once for a *serialized* writer
        (see TargetLock; the in-process single-flight lock in
        streaming/incremental covers threads, not processes).
 
-    Returns the number of rows actually inserted (A3, the reference's
-    ``records_inserted``). Re-running the same batch inserts 0.
+    Returns the number of rows inserted (A3, the reference's
+    ``records_inserted``), counted by an ``Observation`` on the frame
+    being written — the same evaluation that commits the rows, with no
+    second pass. Re-running the same batch inserts 0. ``target_path``
+    is a local or shared POSIX path, as for TargetLock.
     """
     keys = keys or APPLICATION_EVENTS_DEDUP_KEY
-    with TargetLock(target_path) if lock else contextlib.nullcontext():
-        if not os.path.exists(target_path):
-            # a missing target may be an interrupted compaction (crash
-            # between the two swap renames), not a first load — restore
-            # the stranded snapshot BEFORE reading, or the anti-join
-            # dedup sees an empty history and replays double-insert
-            from .maintenance import recover_interrupted_compaction
+    with TargetLock(target_path):
+        # a missing target may be an interrupted compaction (crash
+        # between the two swap renames), not a first load — restore
+        # the stranded snapshot BEFORE deciding, or the anti-join
+        # dedup sees an empty history and replays double-insert
+        from .maintenance import recover_interrupted_compaction
 
-            recover_interrupted_compaction(target_path)
+        recover_interrupted_compaction(target_path)
         batch = df.dropDuplicates(keys)
-        try:
-            # only a missing target may be ignored; any other read
-            # failure must abort — treating a corrupt/unreadable target
-            # as "first load" would skip the anti-join and
-            # double-insert on replay
-            existing = spark.read.parquet(target_path)
-            if partition_by:
-                # prune the anti-join's right side to the partition
-                # values this batch can collide with — expressed as a
-                # semi join (not a driver-side collect) so the value
-                # list never materializes on the driver and dynamic
-                # partition pruning pushes it to the file listing
-                existing = existing.join(
-                    batch.select(*partition_by).distinct(),
-                    partition_by,
-                    "left_semi",
-                )
-            # name-based joins hoist the key columns to the front of
-            # the output — restore the declared order so every file in
-            # the target carries the SAME physical column order as the
-            # first load (mixed orders are value-correct under parquet's
-            # by-name reads but make the directory's inferred schema
-            # order depend on file listing order)
-            batch = batch.join(existing.select(*keys), keys, "left_anti").select(
-                *df.columns
-            )
-        except AnalysisException as e:
-            if "PATH_NOT_FOUND" not in str(e) and "UNABLE_TO_INFER_SCHEMA" not in str(e):
-                raise
-            # first load — no target yet
-        # persist so count and write share one evaluation of the
-        # anti-join plan — otherwise records_inserted could disagree
-        # with the rows actually committed if the source moved between
-        # the two jobs
-        batch = batch.persist()
-        try:
-            inserted = batch.count()
-            writer = batch.write.mode("append")
-            if partition_by:
-                writer = writer.partitionBy(*partition_by)
-            writer.parquet(target_path)
-        finally:
-            batch.unpersist()
-        return inserted
+        if os.path.exists(target_path):  # else a first load: nothing to read
+            try:
+                # only an empty target dir may be ignored; any other read
+                # failure must abort — a corrupt target taken for a first
+                # load would skip the anti-join and double-insert on replay
+                existing = spark.read.parquet(target_path)
+                if partition_by:
+                    # prune the right side to this batch's partition
+                    # values — a semi join, not a driver-side collect, so
+                    # dynamic partition pruning reaches the file listing
+                    existing = existing.join(
+                        batch.select(*partition_by).distinct(), partition_by, "left_semi"
+                    )
+                # name-based joins hoist the keys to the front; restore the
+                # declared order so every file in the target carries the
+                # first load's physical column order (by-name reads are
+                # value-correct either way, but the inferred schema order
+                # would depend on file listing order)
+                batch = batch.join(existing.select(*keys), keys, "left_anti")
+                batch = batch.select(*df.columns)
+            except AnalysisException as e:
+                if "UNABLE_TO_INFER_SCHEMA" not in str(e):
+                    raise
+        inserted = Observation()
+        batch = batch.observe(inserted, F.count(F.lit(1)).alias("n"))
+        writer = batch.write.mode("append")
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.parquet(target_path)
+        return inserted.get["n"]
 
 
 # ---------------------------------------------------------------------
@@ -434,16 +425,14 @@ def write_jdbc_merge_append(
         w = w.option("driver", driver)
     for k, v in writer_options.items():
         w = w.option(k, v)
-    import time as _time
-
-    _t0 = _time.time()
+    _t0 = time.time()
     w.save()
     if timings is not None:
         # perf-characterization hook (SCALE.md JDBC section): the
         # staging write is the executor-parallel leg, the MERGE the
         # single set-based DB statement — the split tells which side
         # a slow load is on
-        timings["staging_write_s"] = _time.time() - _t0
+        timings["staging_write_s"] = time.time() - _t0
 
     def q(c: str) -> str:
         return '"' + c.replace('"', '""') + '"'
@@ -508,10 +497,10 @@ def write_jdbc_merge_append(
                 )()
                 if state not in ("X0Y32", "42P07"):
                     raise
-            _t1 = _time.time()
+            _t1 = time.time()
             inserted = st.executeUpdate(merge_sql)
             if timings is not None:
-                timings["merge_s"] = _time.time() - _t1
+                timings["merge_s"] = time.time() - _t1
             # staging is per-call scratch: drop it after the merge
             # commits (leaving it behind doubles the batch's storage)
             st.executeUpdate(f"DROP TABLE {staging}")
@@ -560,7 +549,6 @@ def write_training_shards(
     Returns {rows, files, shards} for the run (counted from the
     committed output, not the plan).
     """
-    from pyspark.sql import functions as F
 
     (
         df.repartition(n_shards, F.col(shard_col))
@@ -599,7 +587,6 @@ def write_daily_partitions(
     to this writer, not a session-level config flip). Returns the
     distinct days written.
     """
-    from pyspark.sql import functions as F
 
     out = df.withColumn("day", F.col(ts_col).cast("date"))
     (

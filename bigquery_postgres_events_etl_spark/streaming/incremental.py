@@ -22,7 +22,7 @@ from __future__ import annotations
 import threading
 import time
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..io import load_table
@@ -60,6 +60,12 @@ def run_incremental_etl(
     everything else (watermark predicate, commit-then-advance,
     single-flight) is shared. Exercised for real against embedded
     Derby in tests/test_jdbc_derby.py.
+
+    The batch is evaluated once, by the sink's write: the fetched count
+    and the new watermark (max event_timestamp) come from an
+    ``Observation`` on the batch, read after the sink returns (ST4).
+    Only the JDBC path runs a job of its own, ``batch.isEmpty()``, so
+    that an idle trigger sends no statement to the database.
     """
     if not _run_lock.acquire(blocking=False):
         return {"status": "skipped", "reason": "already_running"}  # HTTP 409 twin
@@ -68,31 +74,35 @@ def run_incremental_etl(
         wm = read_watermark_us(state_path, lookback_hours, now_us=now_us)
         events = load_table(spark, source_sf_dir, "events")
         batch = flagship_pipeline(events, tracked=tracked, watermark_us=wm)
-        stats = batch.agg(
-            F.count(F.lit(1)).alias("n"), F.max("event_timestamp").alias("max_ts")
-        ).first()
-        fetched, max_ts = stats["n"], stats["max_ts"]
-        if jdbc_target is not None and fetched == 0:
-            # idle trigger (the common daily case): skip the sink —
-            # the JDBC path would otherwise run staging DDL + a MERGE
-            # against the live database to insert nothing
-            inserted = 0
-        elif jdbc_target is not None:
-            from ..schemas import APPLICATION_EVENTS_DEDUP_KEY
-            from ..sources.sinks import write_jdbc_merge_append
-
-            inserted = write_jdbc_merge_append(
-                batch,
-                jdbc_target["url"],
-                jdbc_target["table"],
-                conflict_keys=jdbc_target.get(
-                    "conflict_keys", list(APPLICATION_EVENTS_DEDUP_KEY)
-                ),
-                driver=jdbc_target.get("driver"),
-                writer_options=jdbc_target.get("writer_options"),
+        got, inserted = {"n": 0, "max_ts": None}, 0
+        # an idle JDBC trigger (the common daily case) skips the sink,
+        # which would otherwise run staging DDL + a MERGE against the
+        # live database to insert nothing
+        if jdbc_target is None or not batch.isEmpty():
+            stats = Observation()
+            batch = batch.observe(
+                stats,
+                F.count(F.lit(1)).alias("n"),
+                F.max("event_timestamp").alias("max_ts"),
             )
-        else:
-            inserted = idempotent_append_parquet(spark, batch, target_path)
+            if jdbc_target is None:
+                inserted = idempotent_append_parquet(spark, batch, target_path)
+            else:
+                from ..schemas import APPLICATION_EVENTS_DEDUP_KEY
+                from ..sources.sinks import write_jdbc_merge_append
+
+                inserted = write_jdbc_merge_append(
+                    batch,
+                    jdbc_target["url"],
+                    jdbc_target["table"],
+                    conflict_keys=jdbc_target.get(
+                        "conflict_keys", list(APPLICATION_EVENTS_DEDUP_KEY)
+                    ),
+                    driver=jdbc_target.get("driver"),
+                    writer_options=jdbc_target.get("writer_options"),
+                )
+            got = stats.get
+        fetched, max_ts = got["n"], got["max_ts"]
         advanced = False
         if max_ts is not None and max_ts > wm:
             advanced = write_watermark_us(state_path, max_ts)  # ST4: after commit

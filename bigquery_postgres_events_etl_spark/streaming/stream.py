@@ -38,9 +38,6 @@ RAW_EVENTS_SCHEMA_NANOS = T.StructType(
     ]
 )
 
-# Backwards-compat alias (older tests/docs referenced this name).
-RAW_EVENTS_SCHEMA = RAW_EVENTS_SCHEMA_NANOS
-
 
 def _ts_is_nanos_int64(source_dir: str) -> bool:
     """Inspect parquet footers under ``source_dir`` for the events
@@ -317,8 +314,6 @@ def streaming_purchase_click_join(
     buffer (clicks older than purchase-watermark − within are
     evicted) — the streaming twin of the batch as-of/range join.
     """
-    from pyspark.sql import functions as F
-
     p = (
         purchases.withWatermark("ts", "30 minutes")
         .select(

@@ -114,3 +114,31 @@ def test_pointer_jumping_raises_on_nonconvergence(spark):
     df = spark.createDataFrame(chain, ["doc_a", "doc_b"])
     with pytest.raises(RuntimeError, match="did not converge"):
         connected_components(df, max_iter=2)
+
+
+def _cached_rdds(spark) -> int:
+    """Persisted RDDs that are not local checkpoints: the labels a
+    connected_components call returns live in a local checkpoint, which
+    Spark also registers as a persisted RDD."""
+    from bigquery_postgres_events_etl_spark.cache import persistent_rdd_count
+
+    rdds = spark.sparkContext._jsc.getPersistentRDDs().values()
+    return persistent_rdd_count(spark) - sum(1 for r in rdds if r.isCheckpointed())
+
+
+def test_connected_components_releases_its_edge_cache(spark):
+    import pytest
+
+    from bigquery_postgres_events_etl_spark.cache import cached_dataframe_plans
+
+    spark.catalog.clearCache()
+    start = _cached_rdds(spark)
+    chain = spark.createDataFrame([(i, i + 1) for i in range(20)], ["doc_a", "doc_b"])
+    assert connected_components(chain).count() == 21
+    assert _cached_rdds(spark) == start
+    assert not cached_dataframe_plans(spark)
+    # the non-convergence raise releases it too
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components(chain, max_iter=1)
+    assert _cached_rdds(spark) == start
+    assert not cached_dataframe_plans(spark)

@@ -260,10 +260,14 @@ def test_purge_keys_rewrites_only_affected_files_and_scrubs_history(
         "c_custkey", "c_name", "c_acctbal"
     )
     # range-partition on the key → files carry disjoint key ranges, so
-    # footer stats can actually prune
+    # footer stats can actually prune. The second version is
+    # range-partitioned too: a plain re-read packs several range files
+    # into one read task, so its files would span overlapping ranges
     write_snapshot(users.repartitionByRange(6, "c_custkey"), target, note="bootstrap")
     write_snapshot(
-        read_table(spark, target).where(F.lit(True)), target, note="second version"
+        read_table(spark, target).where(F.lit(True)).repartitionByRange(6, "c_custkey"),
+        target,
+        note="second version",
     )
     v_before = current_version(target)
     cur_dir = os.path.join(target, f"v={v_before}")
@@ -274,7 +278,11 @@ def test_purge_keys_rewrites_only_affected_files_and_scrubs_history(
     }
 
     total = read_table(spark, target).count()
-    doomed = [r.c_custkey for r in read_table(spark, target).limit(3).collect()]
+    # the three smallest keys: all in the first range file
+    doomed = [
+        r.c_custkey
+        for r in read_table(spark, target).orderBy("c_custkey").limit(3).collect()
+    ]
     stats = purge_keys(spark, target, "c_custkey", doomed)
 
     after = read_table(spark, target)
